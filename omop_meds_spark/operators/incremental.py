@@ -23,11 +23,8 @@ Per refresh of source range ``(v0, v1]`` the cost is O(changed data):
   the affected dim groups only — groups whose count reaches zero become
   delete tombstones.
 
-The view commit is transactional and EXACTLY-ONCE: each fold commits with
-``lineage={"source_version": v1}`` and the cursor is recovered from the
-retained lineage, so a crashed/replayed refresh is a no-op. Vacuuming the
-SOURCE past an unfolded version breaks incrementality (``read_changes``
-raises); refresh before vacuum, exactly like any CDF consumer.
+Cursor, exactly-once commits and the vacuum rules are ``ChangeFeedView``'s,
+shared with ``SCD2View`` and ``vector_index.IVFIndexView``.
 
 Measure semantics: ``n_rows`` is COUNT(*); each ``sum_cols`` entry ``c``
 maintains ``sum_{c}`` in DECIMAL(28,4) (exact, order-free — incremental
@@ -38,6 +35,7 @@ groups.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import operator
 from pathlib import Path
@@ -68,10 +66,114 @@ def _source_col_type(source: SnapshotTable, name: str) -> str:
             pass
     return "string"
 
+
+def _touched_buckets(df: DataFrame, table: SnapshotTable) -> list[int]:
+    """Sorted ids of the ``table`` buckets that ``df``'s keys hash to."""
+    return sorted(r["b"] for r in df.select(
+        bucket_expr(table.key_cols, table.n_buckets).alias("b"))
+        .distinct().collect())
+
+
+class ChangeFeedView:
+    """A materialized view kept fresh by folding a ``SnapshotTable``'s
+    change feed into a second SnapshotTable, ``self.table``.
+
+    The contract every view shares, owned here once:
+
+    * EXACTLY-ONCE. Each refresh of source versions ``(cursor, v1]`` is one
+      transactional commit with ``lineage={"source_version": v1}``, and the
+      cursor is recovered from the retained lineage (the latest commit's
+      manifest always survives retention). A crashed refresh therefore
+      folds everything unconsumed next time, and a replayed one is a no-op
+      that returns False.
+    * A range with no logical change (compaction only) still gets one
+      cursor-advance commit: an empty frame that carries the view table's
+      recorded schema forward, so point lookups keep hashing by the stored
+      key types (see ``table.key_bucket``).
+    * VACUUM. A fresh view over a source whose early history was vacuumed
+      BOOTSTRAPS from the live state (an initial load needs no history). A
+      vacuumed hole PAST the cursor cannot be folded incrementally and
+      raises: refresh before vacuuming the source beyond the cursor, like
+      any change-feed consumer.
+
+    Subclasses set ``source`` and ``table`` and supply three hooks:
+
+    * ``_fold(spark, changes, v0, v1, cleanup)`` folds the change feed of
+      source versions ``(v0, v1]``;
+    * ``_bootstrap(spark, live, v1, cleanup)`` materializes the view from
+      the source's live rows at ``v1``;
+    * ``_payload_ddl()`` is the DDL of the view table's non-key columns.
+
+    ``_fold`` and ``_bootstrap`` return the rows to commit without
+    ``seq_no`` (the commit stamps ``_seq_no``), or None for a cursor-advance
+    commit. ``cleanup`` is an ``ExitStack`` closed after the commit, for
+    frames the commit still reads from a cache.
+    """
+
+    def _seq_no(self, v1: int, batch_id: int) -> int:
+        """LWW order of the committed view rows: the folded source version."""
+        return v1
+
+    @property
+    def cursor(self) -> int:
+        """Highest source version folded in (-1 = nothing yet)."""
+        lin = self.table.lineage_log()
+        return max((int(d["source_version"]) for d in lin.values()
+                    if isinstance(d, dict) and "source_version" in d),
+                   default=-1)
+
+    def refresh(self, spark: SparkSession, to_version: int | None = None) -> bool:
+        """Fold source versions ``(cursor, to_version]`` into the view.
+        Returns False when there is nothing new."""
+        head = self.source.version
+        v1 = head if to_version is None else int(to_version)
+        if v1 > head:
+            raise ValueError(f"refresh: to_version {v1} is beyond source head {head}")
+        v0 = self.cursor
+        if v1 <= v0:
+            return False
+        try:
+            changes = self.source.read_changes(spark, since_version=v0,
+                                               to_version=v1)
+        except ValueError:
+            if v0 >= 0:
+                raise  # incremental hole: the feed between folds was vacuumed
+            self._commit_bootstrap(spark, v1)
+            return True
+        with contextlib.ExitStack() as cleanup:
+            rows = (None if changes is None
+                    else self._fold(spark, changes, v0, v1, cleanup))
+            self._commit(spark, rows, v1)
+        return True
+
+    def _commit_bootstrap(self, spark: SparkSession, v1: int) -> None:
+        live = self.source.read_live(spark, version=v1)
+        with contextlib.ExitStack() as cleanup:
+            rows = (None if live is None
+                    else self._bootstrap(spark, live, v1, cleanup))
+            self._commit(spark, rows, v1)
+
+    def _commit(self, spark: SparkSession, rows: DataFrame | None,
+                v1: int) -> None:
+        batch_id = max(self.table.committed_batches(), default=-1) + 1
+        schema = None
+        if rows is None:
+            keys = [f"`{k}` {_source_col_type(self.source, k)}"
+                    for k in self.table.key_cols]
+            rows = spark.createDataFrame([], ", ".join(
+                keys + [self._payload_ddl(), "seq_no long"]))
+            schema = (self.table.latest() or {}).get("schema")
+        else:
+            rows = rows.withColumn(
+                "seq_no", F.lit(self._seq_no(v1, batch_id)).cast("long"))
+        self.table.commit_delta_auto(rows, batch_id, schema_json=schema,
+                                     lineage={"source_version": v1})
+
+
 _DEC = "decimal(28,4)"
 
 
-class IncrementalAggView:
+class IncrementalAggView(ChangeFeedView):
     def __init__(self, root: str | Path, source: SnapshotTable,
                  dims: list[str], sum_cols: list[str] | None = None,
                  n_buckets: int | None = None):
@@ -83,17 +185,6 @@ class IncrementalAggView:
         self.sum_cols = list(sum_cols or [])
         self.table = SnapshotTable(root, key_cols=self.dims,
                                    n_buckets=n_buckets)
-
-    # ------------------------------------------------------------- cursor
-    @property
-    def cursor(self) -> int:
-        """Highest source version folded in (-1 = nothing yet), recovered
-        from commit lineage — the latest fold's manifest always survives
-        retention, so the cursor does."""
-        lin = self.table.lineage_log()
-        return max((int(d["source_version"]) for d in lin.values()
-                    if isinstance(d, dict) and "source_version" in d),
-                   default=-1)
 
     # ------------------------------------------------------------ refresh
     def _signed(self, df: DataFrame, sign: int) -> DataFrame:
@@ -121,125 +212,78 @@ class IncrementalAggView:
             return None
         return st.join(keys, on=self.source.key_cols, how="left_semi")
 
-    def refresh(self, spark: SparkSession, to_version: int | None = None) -> bool:
-        """Fold source versions ``(cursor, to_version]`` into the view.
-        Returns False when there is nothing new. Idempotent: re-running
-        with the same range is a no-op (cursor check + transactional
-        commit).
+    def _bootstrap(self, spark: SparkSession, live: DataFrame, v1: int,
+                   cleanup: contextlib.ExitStack) -> DataFrame:
+        return self._merge(spark, [self._signed(live, 1)], cleanup)
 
-        Initial materialization over a table whose early history was
-        vacuumed BOOTSTRAPS from the live state instead of the change feed
-        (an initial load needs no history). A vacuumed hole PAST the
-        cursor, however, is unrecoverable incrementally and raises —
-        refresh before vacuuming the source beyond the cursor, exactly
-        like any change-feed consumer."""
+    def _fold(self, spark: SparkSession, changes: DataFrame, v0: int, v1: int,
+              cleanup: contextlib.ExitStack) -> DataFrame | None:
         src = self.source
-        head = src.version
-        v1 = head if to_version is None else to_version
-        if v1 > head:
-            raise ValueError(f"refresh: to_version {v1} is beyond source head {head}")
-        v0 = self.cursor
-        if v1 <= v0:
-            return False
-        batch_id = max(self.table.committed_batches(), default=-1) + 1
-        lineage = {"source_version": v1, "since_version": v0}
+        # keys feed both state reads; persist so the feed scans once
+        keys = changes.select(*src.key_cols).distinct().persist()
+        cleanup.callback(keys.unpersist)
+        src_buckets = _touched_buckets(keys, src)
+        new = self._changed_key_state(spark, v1, src_buckets, keys)
+        old = self._changed_key_state(spark, v0, src_buckets, keys)
+        if old is None and v0 >= 0 and src.manifest_at(v0) is None:
+            # the cursor version itself was vacuumed: read_changes can
+            # still satisfy (v0, v1] (it only needs the deltas AFTER
+            # v0) but the old-state decrement is gone — silently
+            # skipping it would ADD each changed key's new contribution
+            # on top of its old one (permanent double count)
+            raise ValueError(
+                f"incremental refresh: cursor version {v0} was vacuumed "
+                "from the source — the view cannot subtract the prior "
+                "state; rebuild the view or vacuum after refreshing")
+        parts = [self._signed(d, s) for d, s in ((new, 1), (old, -1))
+                 if d is not None]
+        return self._merge(spark, parts, cleanup) if parts else None
 
-        try:
-            ch = src.read_changes(spark, since_version=v0, to_version=v1)
-            bootstrap = False
-        except ValueError:
-            if v0 >= 0:
-                raise  # incremental hole: the feed between folds was vacuumed
-            ch, bootstrap = None, True
-        keys = None
-        if bootstrap:
-            new = src.read_live(spark, version=v1)
-            parts = [] if new is None else [self._signed(new, 1)]
-        elif ch is None:
-            parts = []  # compaction-only range: just advance the cursor
-        else:
-            # keys feed both state reads; persist so the feed scans once
-            keys = ch.select(*src.key_cols).distinct().persist()
-            src_buckets = sorted(
-                r["b"] for r in keys.select(
-                    bucket_expr(src.key_cols, src.n_buckets).alias("b"))
-                .distinct().collect())
-            new = self._changed_key_state(spark, v1, src_buckets, keys)
-            old = self._changed_key_state(spark, v0, src_buckets, keys)
-            if old is None and v0 >= 0 and src.manifest_at(v0) is None:
-                # the cursor version itself was vacuumed: read_changes can
-                # still satisfy (v0, v1] (it only needs the deltas AFTER
-                # v0) but the old-state decrement is gone — silently
-                # skipping it would ADD each changed key's new contribution
-                # on top of its old one (permanent double count)
-                keys.unpersist()
-                raise ValueError(
-                    f"incremental refresh: cursor version {v0} was vacuumed "
-                    "from the source — the view cannot subtract the prior "
-                    "state; rebuild the view or vacuum after refreshing")
-            parts = [self._signed(d, s) for d, s in ((new, 1), (old, -1))
-                     if d is not None]
-        if not parts:
-            if keys is not None:
-                keys.unpersist()  # the early return skips the finally below
-            # carry the recorded schema forward: an empty fold must not
-            # re-stamp the view's key column types (point lookups hash by
-            # the stored schema — see table.key_bucket)
-            self.table.commit_delta_auto(
-                self._empty_commit_frame(spark), batch_id, lineage=lineage,
-                schema_json=(self.table.latest() or {}).get("schema"))
-            return True
+    def _merge(self, spark: SparkSession, parts: list[DataFrame],
+               cleanup: contextlib.ExitStack) -> DataFrame:
+        """The view rows of the dim groups ``parts`` (signed source rows)
+        touch, with the signed contributions added to their current
+        measures; groups whose count reaches zero become tombstones."""
         signed = functools.reduce(lambda a, b: a.unionByName(b), parts)
         # delta drives the bucket-id collect AND the merge write — persist
         # so its O(changed-bucket state) upstream computes once
         delta = self._agg(signed).persist()
-        try:
-            # merge into the view's current rows for the affected dims only:
-            # manifest-pruned read of the delta's buckets, null-safe semi
-            # join down to the changed dim groups, then a full outer with
-            # the delta (renamed columns — no alias ambiguity, nulls are
-            # real groups)
-            vbs = sorted(
-                r["b"] for r in delta.select(
-                    bucket_expr(self.dims, self.table.n_buckets).alias("b"))
-                .distinct().collect())
-            cur = self.table.read_live(spark, buckets=vbs)
-            mtypes = self._measure_types()
-            if cur is not None:
-                cur_r = cur.select(
-                    *[F.col(k).alias(f"_c_{k}") for k in self.dims],
-                    *[F.col(n).alias(f"_c_{n}") for n, _ in mtypes])
-                dimkeys = delta.select(
-                    *[F.col(k).alias(f"_k_{k}") for k in self.dims]).distinct()
-                semi = functools.reduce(operator.and_, [
-                    F.col(f"_c_{k}").eqNullSafe(F.col(f"_k_{k}"))
-                    for k in self.dims])
-                cur_r = cur_r.join(dimkeys, semi, "left_semi")
-                outer = functools.reduce(operator.and_, [
-                    F.col(k).eqNullSafe(F.col(f"_c_{k}")) for k in self.dims])
-                j = delta.join(cur_r, outer, "full_outer")
-                out_dims = [F.coalesce(F.col(k), F.col(f"_c_{k}")).alias(k)
-                            for k in self.dims]
-                measures = [
-                    (F.coalesce(F.col(n), F.lit(0).cast(t))
-                     + F.coalesce(F.col(f"_c_{n}"), F.lit(0).cast(t)))
-                    .cast(t).alias(n)
-                    for n, t in mtypes]
-            else:
-                j = delta
-                out_dims = [F.col(k) for k in self.dims]
-                measures = [F.coalesce(F.col(n), F.lit(0).cast(t))
-                            .cast(t).alias(n) for n, t in mtypes]
-            merged = j.select(*out_dims, *measures).withColumn(
-                "op",
-                F.when(F.col("n_rows") == 0, F.lit("D")).otherwise(F.lit("U"))
-            ).withColumn("seq_no", F.lit(v1).cast("long"))
-            self.table.commit_delta_auto(merged, batch_id, lineage=lineage)
-        finally:
-            delta.unpersist()
-            if keys is not None:
-                keys.unpersist()
-        return True
+        cleanup.callback(delta.unpersist)
+        # merge into the view's current rows for the affected dims only:
+        # manifest-pruned read of the delta's buckets, null-safe semi
+        # join down to the changed dim groups, then a full outer with
+        # the delta (renamed columns — no alias ambiguity, nulls are
+        # real groups)
+        cur = self.table.read_live(
+            spark, buckets=_touched_buckets(delta, self.table))
+        mtypes = self._measure_types()
+        if cur is not None:
+            cur_r = cur.select(
+                *[F.col(k).alias(f"_c_{k}") for k in self.dims],
+                *[F.col(n).alias(f"_c_{n}") for n, _ in mtypes])
+            dimkeys = delta.select(
+                *[F.col(k).alias(f"_k_{k}") for k in self.dims]).distinct()
+            semi = functools.reduce(operator.and_, [
+                F.col(f"_c_{k}").eqNullSafe(F.col(f"_k_{k}"))
+                for k in self.dims])
+            cur_r = cur_r.join(dimkeys, semi, "left_semi")
+            outer = functools.reduce(operator.and_, [
+                F.col(k).eqNullSafe(F.col(f"_c_{k}")) for k in self.dims])
+            j = delta.join(cur_r, outer, "full_outer")
+            out_dims = [F.coalesce(F.col(k), F.col(f"_c_{k}")).alias(k)
+                        for k in self.dims]
+            measures = [
+                (F.coalesce(F.col(n), F.lit(0).cast(t))
+                 + F.coalesce(F.col(f"_c_{n}"), F.lit(0).cast(t)))
+                .cast(t).alias(n)
+                for n, t in mtypes]
+        else:
+            j = delta
+            out_dims = [F.col(k) for k in self.dims]
+            measures = [F.coalesce(F.col(n), F.lit(0).cast(t))
+                        .cast(t).alias(n) for n, t in mtypes]
+        return j.select(*out_dims, *measures).withColumn(
+            "op", F.when(F.col("n_rows") == 0, F.lit("D")).otherwise(F.lit("U")))
 
     def _measure_types(self) -> list[tuple[str, str]]:
         out = [("n_rows", "long")]
@@ -248,12 +292,9 @@ class IncrementalAggView:
             out.append((f"cnt_{c}", "long"))
         return out
 
-    def _empty_commit_frame(self, spark: SparkSession) -> DataFrame:
-        fields = ", ".join(
-            [f"`{d}` {_source_col_type(self.source, d)}" for d in self.dims]
-            + [f"`{n}` {t}" for n, t in self._measure_types()]
-            + ["op string", "seq_no long"])
-        return spark.createDataFrame([], fields)
+    def _payload_ddl(self) -> str:
+        return ", ".join([f"`{n}` {t}" for n, t in self._measure_types()]
+                         + ["op string"])
 
     # --------------------------------------------------------------- read
     def read(self, spark: SparkSession) -> DataFrame | None:
@@ -270,7 +311,7 @@ class IncrementalAggView:
         return df.select(*cols)
 
 
-class SCD2View:
+class SCD2View(ChangeFeedView):
     """Incrementally-maintained TYPE-2 HISTORY view over a CDC table.
 
     Where ``IncrementalAggView`` folds the change feed into a GROUP BY,
@@ -295,12 +336,9 @@ class SCD2View:
     it to #commits-that-touched-the-key entries; compact upstream or
     archive downstream if a key churns every commit for years).
 
-    Exactly-once: each fold commits with ``lineage={"source_version"}``;
-    the cursor is recovered from retained lineage, so crashed or replayed
-    refreshes are no-ops (same contract as IncrementalAggView, including
-    the bootstrap-from-live-state path over a vacuumed source — bootstrap
-    seeds each key's log with its CURRENT version only, history before
-    the vacuum horizon being unrecoverable by definition).
+    Bootstrap over a vacuumed source (see ``ChangeFeedView``) seeds each
+    key's log with its CURRENT version only: history before the vacuum
+    horizon is unrecoverable by definition.
     """
 
     _META = {"_commit_version", "_commit_batch_id"}
@@ -311,13 +349,6 @@ class SCD2View:
         self.op_col = op_col
         self.table = SnapshotTable(root, key_cols=list(source.key_cols),
                                    n_buckets=n_buckets)
-
-    @property
-    def cursor(self) -> int:
-        lin = self.table.lineage_log()
-        return max((int(d["source_version"]) for d in lin.values()
-                    if isinstance(d, dict) and "source_version" in d),
-                   default=-1)
 
     def _version_struct(self, df: DataFrame) -> F.Column:
         src = self.source
@@ -342,39 +373,19 @@ class SCD2View:
             F.col(self.op_col).alias("op"),
             *[F.col(c) for c in pay])
 
-    def refresh(self, spark: SparkSession, to_version: int | None = None) -> bool:
-        """Fold source versions ``(cursor, to_version]``. Returns False
-        when there is nothing new."""
-        src = self.source
-        head = src.version
-        v1 = head if to_version is None else to_version
-        if v1 > head:
-            raise ValueError(f"refresh: to_version {v1} is beyond source head {head}")
-        v0 = self.cursor
-        if v1 <= v0:
-            return False
-        batch_id = max(self.table.committed_batches(), default=-1) + 1
-        lineage = {"source_version": v1, "since_version": v0}
-        try:
-            ch = src.read_changes(spark, since_version=v0, to_version=v1)
-        except ValueError:
-            if v0 >= 0:
-                raise  # incremental hole: the feed between folds was vacuumed
-            ch = src.read_live(spark, version=v1)  # bootstrap: current-only log
-        key = list(src.key_cols)
-        if ch is None:  # compaction-only range: just advance the cursor
-            self.table.commit_delta_auto(
-                self._empty_frame(spark), batch_id, lineage=lineage,
-                schema_json=(self.table.latest() or {}).get("schema"))
-            return True
+    def _bootstrap(self, spark: SparkSession, live: DataFrame, v1: int,
+                   cleanup: contextlib.ExitStack) -> DataFrame:
+        return self._fold(spark, live, -1, v1, cleanup)
+
+    def _fold(self, spark: SparkSession, ch: DataFrame, v0: int, v1: int,
+              cleanup: contextlib.ExitStack) -> DataFrame:
+        key = list(self.source.key_cols)
         new_logs = (ch.groupBy(*key)
                       .agg(F.collect_list(self._version_struct(ch)).alias("_new")))
         # merge with the affected keys' EXISTING logs: manifest-pruned read
         # of just those view buckets, left join (unaffected keys untouched)
-        vbs = sorted(r["b"] for r in new_logs.select(
-            bucket_expr(key, self.table.n_buckets).alias("b"))
-            .distinct().collect())
-        cur = self.table.read_live(spark, buckets=vbs)
+        cur = self.table.read_live(
+            spark, buckets=_touched_buckets(new_logs, self.table))
         new_t = new_logs.schema["_new"].dataType
         if cur is not None:
             j = new_logs.join(
@@ -408,25 +419,15 @@ class SCD2View:
             F.coalesce(_aligned(F.col("_old"), old_t),
                        F.array().cast(union_arr_t)),
             _aligned(F.col("_new"), new_t))))
-        out = j.select(
-            *key,
-            hist.alias("history"),
-            # LWW order for the view row: the fold's source version — a
-            # late-data merge changes the log without raising its max seq,
-            # so max-seq would tie and break winner determinism
-            F.lit(v1).cast("long").alias("seq_no"),
-            F.lit("U").alias(self.op_col),
-        )
-        self.table.commit_delta_auto(out, batch_id, lineage=lineage)
-        return True
+        # seq_no, stamped on commit, is the fold's source version: a
+        # late-data merge changes the log without raising its max seq, so
+        # max-seq would tie and break winner determinism
+        return j.select(*key, hist.alias("history"),
+                        F.lit("U").alias(self.op_col))
 
-    def _empty_frame(self, spark: SparkSession) -> DataFrame:
-        key_fields = ", ".join(
-            f"{k} {_source_col_type(self.source, k)}"
-            for k in self.source.key_cols)
-        return spark.createDataFrame(
-            [], f"{key_fields}, history array<struct<seq long, tb string, "
-                f"op string>>, seq_no long, {self.op_col} string")
+    def _payload_ddl(self) -> str:
+        return ("history array<struct<seq long, tb string, op string>>, "
+                f"`{self.op_col}` string")
 
     # ----------------------------------------------------------- readers
     def read_log(self, spark: SparkSession) -> DataFrame | None:

@@ -136,9 +136,9 @@ def _inflate(data: bytes) -> bytes:
             ln, nln = struct.unpack_from("<HH", data, hdr)
             if ln ^ nln != 0xFFFF:
                 raise ValueError("inflate: stored LEN/NLEN mismatch")
-            out += data[hdr + 4: hdr + 4 + ln]
-            if len(out[-ln:]) != ln and ln:
+            if hdr + 4 + ln > len(data):
                 raise ValueError("inflate: truncated stored block")
+            out += data[hdr + 4: hdr + 4 + ln]
             br.pos = (hdr + 4 + ln) * 8
         elif btype in (1, 2):
             if btype == 1:

@@ -8,8 +8,8 @@ upserts and deletes, WITHOUT ever re-indexing the corpus.
 
 ``IVFIndexView`` is that index as a materialized view, maintained from the
 table's change feed exactly like ``IncrementalAggView`` maintains an
-aggregate (same cursor/exactly-once contract, same O(changed data) refresh
-cost), but keyed BY THE SOURCE KEY — which makes the fold strictly
+aggregate (a ``ChangeFeedView``, same O(changed data) refresh cost), but
+keyed BY THE SOURCE KEY — which makes the fold strictly
 simpler: no old-state subtraction, a changed key's index row is simply
 upserted (its new cell + quantized vector) or tombstoned (key deleted),
 and the index table's own LWW merge resolves everything else.
@@ -36,10 +36,6 @@ Design points, in scale order:
   skipping applies after a ``cluster_by=["cell"]`` compaction; candidates
   score with the exact int64 dot and a top-k sort on the (tiny) candidate
   set. Corpus-side cost: the probed cells only.
-* **Exactly-once**: each refresh commits with
-  ``lineage={"source_version": v1}``; the cursor recovers from lineage, a
-  replayed refresh is a no-op, and vacuuming the source past the cursor
-  raises (refresh before vacuum — the universal CDF-consumer contract).
 
 Reference note: the reference has no vector surface at all (Polars ETL);
 this composes the repo's own primitives (snapshot table, change feed,
@@ -49,6 +45,7 @@ pipeline needs at 100 TB.
 
 from __future__ import annotations
 
+import contextlib
 import json
 from pathlib import Path
 
@@ -56,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..table import SnapshotTable
+from .incremental import ChangeFeedView, _touched_buckets
 from .similarity import QUANT, _nearest_cells, int_dot
 
 _CODEBOOK_FILE = "_codebook.json"
@@ -140,7 +138,7 @@ def kmeans_codebook(spark: SparkSession, corpus: DataFrame,
     return cents
 
 
-class IVFIndexView:
+class IVFIndexView(ChangeFeedView):
     """See module docstring. ``source`` rows must carry ``emb_col``
     (``array<float/double>``); the index table is keyed by
     ``source.key_cols`` with payload (cell int, e array<long>)."""
@@ -161,14 +159,20 @@ class IVFIndexView:
         return self.root / _CODEBOOK_FILE
 
     def codebook(self) -> list[list[int]] | None:
-        """cid-ordered quantized centroid vectors (None before build())."""
+        """cid-ordered quantized centroid vectors (None before build()). A
+        corrupt file raises: treating it as absent would let ``build()``
+        write new centroids under index rows assigned to the old ones."""
         try:
-            return json.loads(self._codebook_path.read_text())["centroids"]
-        except (OSError, ValueError, KeyError):
+            raw = self._codebook_path.read_bytes()
+        except FileNotFoundError:
             return None
-
-    def _codebook_df(self, spark: SparkSession, cents: list[list[int]]):
-        return _cents_df(spark, cents)
+        try:
+            cents = json.loads(raw)["centroids"]
+            if all(isinstance(c, list) for c in cents):
+                return cents
+        except (ValueError, KeyError, TypeError):
+            pass
+        raise ValueError(f"IVFIndexView: corrupt codebook {self._codebook_path}")
 
     def build(self, spark: SparkSession, method: str = "first_k",
               kmeans_iters: int = 2) -> int:
@@ -222,26 +226,14 @@ class IVFIndexView:
         Pending changes fold FIRST: the re-assignment only asserts the
         live corpus, so a source delete sitting between the cursor and
         head would otherwise survive as a stale live index row."""
-        self.refresh(spark)
-        try:  # re-pick with the same method the index was built with
-            method = json.loads(self._codebook_path.read_text()).get(
-                "method", "first_k")
-        except (OSError, ValueError):
-            method = "first_k"
-        self._codebook_path.unlink(missing_ok=True)
+        self.refresh(spark)  # also checks the codebook
+        # re-pick with the same method the index was built with
+        method = json.loads(self._codebook_path.read_text()).get(
+            "method", "first_k")
+        self._codebook_path.unlink()
         n = self.build(spark, method=method)
-        live = self.source.read_live(spark)
-        self._commit_assignments(spark, live, None,
-                                 self.source.version, bootstrap=True)
+        self._commit_bootstrap(spark, self.source.version)
         return n
-
-    # ------------------------------------------------------------- cursor
-    @property
-    def cursor(self) -> int:
-        lin = self.table.lineage_log()
-        return max((int(d["source_version"]) for d in lin.values()
-                    if isinstance(d, dict) and "source_version" in d),
-                   default=-1)
 
     # ------------------------------------------------------------ refresh
     def _assign(self, spark: SparkSession, rows: DataFrame) -> DataFrame:
@@ -249,7 +241,7 @@ class IVFIndexView:
         argmin projection, no corpus exchange."""
         from .similarity import quantized_col
 
-        cb = self._codebook_df(spark, self.codebook())
+        cb = _cents_df(spark, self.codebook())
         return (
             rows.select(*self.source.key_cols,
                         quantized_col(self.emb_col).alias("e"))
@@ -263,91 +255,50 @@ class IVFIndexView:
             )
         )
 
-    def _commit_assignments(self, spark: SparkSession, new_live: DataFrame | None,
-                            gone_keys: DataFrame | None, v1: int,
-                            bootstrap: bool = False) -> None:
-        parts = []
-        if new_live is not None:
-            parts.append(self._assign(spark, new_live))
-        if gone_keys is not None:
-            parts.append(gone_keys.select(
-                *self.source.key_cols,
-                F.lit(None).cast("array<long>").alias("e"),
-                F.lit(None).cast("int").alias("cell"),
-                F.lit("D").alias("op")))
-        # seq_no stamps from the INDEX's own monotone batch id, not the
-        # source version: the cursor lives in lineage, and two index
-        # commits can legitimately share a source version (rebuild =
+    def _tombstones(self, keys: DataFrame) -> DataFrame:
+        return keys.select(
+            *self.source.key_cols,
+            F.lit(None).cast("array<long>").alias("e"),
+            F.lit(None).cast("int").alias("cell"),
+            F.lit("D").alias("op"))
+
+    def _payload_ddl(self) -> str:
+        return "e array<long>, cell int, op string"
+
+    def _seq_no(self, v1: int, batch_id: int) -> int:
+        # the INDEX's own monotone batch id, not the source version: two
+        # index commits can legitimately share a source version (rebuild =
         # refresh-fold + bootstrap at the same v1) — stamping v1 would tie
         # their LWW order, and without an event_id tiebreak a tie is
         # undefined. Index-local batch ids never tie.
-        batch_id = max(self.table.committed_batches(), default=-1) + 1
-        lineage = {"source_version": v1, "bootstrap": bootstrap}
-        if not parts:
-            from .incremental import _source_col_type
+        return batch_id
 
-            empty = spark.createDataFrame(
-                [], ", ".join(
-                    [f"`{k}` {_source_col_type(self.source, k)}"
-                     for k in self.source.key_cols]
-                    + ["e array<long>", "cell int", "op string",
-                       "seq_no long"]))
-            self.table.commit_delta_auto(empty, batch_id, lineage=lineage)
-            return
-        import functools
+    def _bootstrap(self, spark: SparkSession, live: DataFrame, v1: int,
+                   cleanup: contextlib.ExitStack) -> DataFrame:
+        return self._assign(spark, live)
 
-        delta = functools.reduce(lambda a, b: a.unionByName(b), parts) \
-            .withColumn("seq_no", F.lit(batch_id).cast("long"))
-        self.table.commit_delta_auto(delta, batch_id, lineage=lineage)
+    def _fold(self, spark: SparkSession, changes: DataFrame, v0: int, v1: int,
+              cleanup: contextlib.ExitStack) -> DataFrame:
+        """Key-local: changed keys re-assign from their LIVE state at v1
+        (never from the range's raw winners — the LWW across generations
+        is what counts), deleted keys tombstone."""
+        src = self.source
+        keys = changes.select(*src.key_cols).distinct().persist()
+        cleanup.callback(keys.unpersist)
+        live = src.read_live(spark, buckets=_touched_buckets(keys, src),
+                             version=v1)
+        if live is None:
+            return self._tombstones(keys)
+        new_live = live.join(keys, on=src.key_cols, how="left_semi")
+        gone = keys.join(new_live.select(*src.key_cols), on=src.key_cols,
+                         how="left_anti")
+        return self._assign(spark, new_live).unionByName(self._tombstones(gone))
 
     def refresh(self, spark: SparkSession, to_version: int | None = None) -> bool:
-        """Fold source versions ``(cursor, v1]`` into the index. The fold
-        is key-local: changed keys re-assign from their LIVE state at v1
-        (never from the range's raw winners — the LWW across generations
-        is what counts), deleted keys tombstone. Idempotent; False when
-        nothing new."""
+        """``ChangeFeedView.refresh`` once the codebook exists."""
         if self.codebook() is None:
             raise ValueError("IVFIndexView.refresh: build() the codebook first")
-        src = self.source
-        head = src.version
-        v1 = head if to_version is None else int(to_version)
-        if v1 > head:
-            raise ValueError(f"refresh: to_version {v1} beyond source head {head}")
-        v0 = self.cursor
-        if v1 <= v0:
-            return False
-        try:
-            ch = src.read_changes(spark, since_version=v0, to_version=v1)
-            bootstrap = False
-        except ValueError:
-            if v0 >= 0:
-                raise  # vacuumed hole past the cursor — same contract as views
-            ch, bootstrap = None, True
-        if bootstrap:
-            self._commit_assignments(spark, src.read_live(spark, version=v1),
-                                     None, v1, bootstrap=True)
-            return True
-        if ch is None:  # compaction-only range: cursor-advance commit
-            self._commit_assignments(spark, None, None, v1)
-            return True
-        from ..table import bucket_expr
-
-        keys = ch.select(*src.key_cols).distinct().persist()
-        try:
-            src_buckets = sorted(
-                r["b"] for r in keys.select(
-                    bucket_expr(src.key_cols, src.n_buckets).alias("b"))
-                .distinct().collect())
-            live = src.read_live(spark, buckets=src_buckets, version=v1)
-            new_live = None if live is None else live.join(
-                keys, on=src.key_cols, how="left_semi")
-            gone = keys if new_live is None else keys.join(
-                new_live.select(*src.key_cols), on=src.key_cols,
-                how="left_anti")
-            self._commit_assignments(spark, new_live, gone, v1)
-        finally:
-            keys.unpersist()
-        return True
+        return super().refresh(spark, to_version)
 
     # -------------------------------------------------------------- reads
     def cell_stats(self, spark: SparkSession) -> DataFrame | None:

@@ -1619,7 +1619,7 @@ ALL_QUERIES = {
     # last driver-green row is round 3, then 9 flagship anchors so the
     # core CDC/TPCH surface keeps a fresh row each round.  The remaining
     # 41 were all driver-green in round 4 with unchanged code.
-    # `python tools/parity_check.py` remains the full-87 local gate.
+    # `python tools/parity_check.py` remains the full-91 local gate.
     "pii_pseudonymize": pii_pseudonymize,
     "ngram_decontaminate": ngram_decontaminate,
     "gopher_repetition": gopher_repetition,

@@ -78,7 +78,7 @@ class StreamingCDCRunner:
         constraints: list[str] | None = None,
     ):
         self.spark = spark
-        # incremental materialized views (IncrementalAggView / SCD2View —
+        # incremental materialized views (ChangeFeedView subclasses —
         # anything with .refresh(spark)), refreshed inside foreachBatch
         # after the micro-batch commits: the streaming twin of
         # CDCRunner(views=). A crash between commit and refresh self-heals

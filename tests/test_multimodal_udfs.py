@@ -260,6 +260,23 @@ def test_png_decode_rejects_malformed():
         _png_decode(good[:-6])
 
 
+def test_png_inflate_rejects_truncated_second_stored_block():
+    """A cut-short stored block must raise even when earlier blocks
+    already put more than its LEN bytes into the output."""
+    import struct
+
+    from omop_meds_spark.operators.png import _inflate
+
+    def stored(payload: bytes, final: int) -> bytes:
+        n = len(payload)
+        return bytes([final]) + struct.pack("<HH", n, n ^ 0xFFFF) + payload
+
+    whole = stored(b"0123456789", 0) + stored(b"abcde", 1)
+    assert _inflate(whole) == b"0123456789abcde"
+    with pytest.raises(ValueError, match="truncated stored block"):
+        _inflate(whole[:-3])
+
+
 def test_png_decode_real_spark_path(docs):
     """End-to-end through mapInPandas: every document decodes to its
     text-derived aggregates, filters varying by doc_id."""
