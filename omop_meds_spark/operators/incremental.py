@@ -8,20 +8,27 @@ folds the table's change feed into a second SnapshotTable keyed by the
 group dimensions — Flink/Materialize-style incremental view maintenance,
 expressed as plain DataFrame algebra over the engine's own primitives.
 
-Per refresh of source range ``(v0, v1]`` the cost is O(changed data):
+Per refresh of source range ``(v0, v1]``:
 
 * ``read_changes(v0, v1)`` — manifest-driven, the range's delta files
-  only — yields the CHANGED KEYS;
-* the keys' buckets are re-read at both versions (manifest-pruned
-  ``read_live``, restricted to the touched buckets and semi-joined to the
-  keys) — old state decrements, new state increments. Diffing full
-  before/after states (not the range's winner rows) is what makes the
-  fold correct under ANY sequencing: a changed key's final value is the
-  LWW across all generations, which the range's own winners need not be;
+  only — yields the CHANGED KEYS, and ``changed_buckets(v0, v1)`` names
+  the source buckets they live in from the same manifests (no job);
+* ONE scan diffs the keys' before/after state (``winners_at``): the
+  touched buckets' files at ``v0`` and ``v1`` are read once (the two
+  versions share most files), semi-joined to the keys and LWW-reduced in
+  one ``groupBy(key)`` into each key's live row at both versions — old
+  row decrements, new row increments. Diffing full before/after states
+  (not the range's winner rows) is what makes the fold correct under ANY
+  sequencing: a changed key's final value is the LWW across all
+  generations, which the range's own winners need not be;
 * the signed contributions aggregate to one tiny delta frame, which
   merges (full outer, null-safe on dims) into the view's current rows for
   the affected dim groups only — groups whose count reaches zero become
   delete tombstones.
+
+The cost is therefore O(state of the touched source buckets) — the whole
+table when a refresh range touches every bucket — plus O(touched view
+buckets) for the merge, not O(changed data).
 
 Cursor, exactly-once commits and the vacuum rules are ``ChangeFeedView``'s,
 shared with ``SCD2View`` and ``vector_index.IVFIndexView``.
@@ -38,6 +45,7 @@ from __future__ import annotations
 import contextlib
 import functools
 import operator
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,10 +76,27 @@ def _source_col_type(source: SnapshotTable, name: str) -> str:
 
 
 def _touched_buckets(df: DataFrame, table: SnapshotTable) -> list[int]:
-    """Sorted ids of the ``table`` buckets that ``df``'s keys hash to."""
+    """Sorted ids of the ``table`` buckets that ``df``'s keys hash to (one
+    Spark job)."""
     return sorted(r["b"] for r in df.select(
         bucket_expr(table.key_cols, table.n_buckets).alias("b"))
         .distinct().collect())
+
+
+def refresh_views(spark: SparkSession, views: list) -> list[bool]:
+    """``refresh`` every view at the same time, on a pool sized to the
+    list; returns their results in list order. Every refresh runs to its
+    end before the first error (in list order) is re-raised.
+
+    Views are independent: each reads the source's immutable files and
+    manifests (the table's state replay never mutates its shared cache),
+    commits to its own table and keeps its own cursor, so a view that
+    fails simply folds its range again on the next refresh."""
+    if len(views) <= 1:
+        return [v.refresh(spark) for v in views]
+    with ThreadPoolExecutor(len(views)) as pool:
+        futures = [pool.submit(v.refresh, spark) for v in views]
+    return [f.result() for f in futures]
 
 
 class ChangeFeedView:
@@ -98,8 +123,11 @@ class ChangeFeedView:
 
     Subclasses set ``source`` and ``table`` and supply three hooks:
 
-    * ``_fold(spark, changes, v0, v1, cleanup)`` folds the change feed of
-      source versions ``(v0, v1]``;
+    * ``_fold(spark, changes, v0, v1, buckets, cleanup)`` folds the change
+      feed of source versions ``(v0, v1]``; ``buckets`` are the sorted
+      source bucket ids (current layout) its keys live in — read from the
+      range's manifests, or collected from the feed when the range
+      crosses a bucket-layout change;
     * ``_bootstrap(spark, live, v1, cleanup)`` materializes the view from
       the source's live rows at ``v1``;
     * ``_payload_ddl()`` is the DDL of the view table's non-key columns.
@@ -141,8 +169,12 @@ class ChangeFeedView:
             self._commit_bootstrap(spark, v1)
             return True
         with contextlib.ExitStack() as cleanup:
-            rows = (None if changes is None
-                    else self._fold(spark, changes, v0, v1, cleanup))
+            rows = None
+            if changes is not None:
+                buckets = self.source.changed_buckets(v0, v1)
+                if buckets is None:  # the range crosses a layout change
+                    buckets = _touched_buckets(changes, self.source)
+                rows = self._fold(spark, changes, v0, v1, buckets, cleanup)
             self._commit(spark, rows, v1)
         return True
 
@@ -187,8 +219,8 @@ class IncrementalAggView(ChangeFeedView):
                                    n_buckets=n_buckets)
 
     # ------------------------------------------------------------ refresh
-    def _signed(self, df: DataFrame, sign: int) -> DataFrame:
-        cols = [F.col(d) for d in self.dims] + [F.lit(sign).alias("_w")]
+    def _signed(self, df: DataFrame, sign: F.Column) -> DataFrame:
+        cols = [F.col(d) for d in self.dims] + [sign.alias("_w")]
         for c in self.sum_cols:
             cols.append(F.col(c).cast("decimal(18,4)").alias(c))
         return df.select(*cols)
@@ -203,29 +235,14 @@ class IncrementalAggView(ChangeFeedView):
                         .alias(f"cnt_{c}"))
         return signed.groupBy(*self.dims).agg(*aggs)
 
-    def _changed_key_state(self, spark: SparkSession, version: int,
-                           buckets: list[int], keys: DataFrame) -> DataFrame | None:
-        if version < 0:
-            return None
-        st = self.source.read_live(spark, buckets=buckets, version=version)
-        if st is None:
-            return None
-        return st.join(keys, on=self.source.key_cols, how="left_semi")
-
     def _bootstrap(self, spark: SparkSession, live: DataFrame, v1: int,
                    cleanup: contextlib.ExitStack) -> DataFrame:
-        return self._merge(spark, [self._signed(live, 1)], cleanup)
+        return self._merge(spark, self._signed(live, F.lit(1)), cleanup)
 
     def _fold(self, spark: SparkSession, changes: DataFrame, v0: int, v1: int,
-              cleanup: contextlib.ExitStack) -> DataFrame | None:
+              buckets: list[int], cleanup: contextlib.ExitStack) -> DataFrame | None:
         src = self.source
-        # keys feed both state reads; persist so the feed scans once
-        keys = changes.select(*src.key_cols).distinct().persist()
-        cleanup.callback(keys.unpersist)
-        src_buckets = _touched_buckets(keys, src)
-        new = self._changed_key_state(spark, v1, src_buckets, keys)
-        old = self._changed_key_state(spark, v0, src_buckets, keys)
-        if old is None and v0 >= 0 and src.manifest_at(v0) is None:
+        if v0 >= 0 and src.manifest_at(v0) is None:
             # the cursor version itself was vacuumed: read_changes can
             # still satisfy (v0, v1] (it only needs the deltas AFTER
             # v0) but the old-state decrement is gone — silently
@@ -235,16 +252,25 @@ class IncrementalAggView(ChangeFeedView):
                 f"incremental refresh: cursor version {v0} was vacuumed "
                 "from the source — the view cannot subtract the prior "
                 "state; rebuild the view or vacuum after refreshing")
-        parts = [self._signed(d, s) for d, s in ((new, 1), (old, -1))
-                 if d is not None]
-        return self._merge(spark, parts, cleanup) if parts else None
+        cols = list(dict.fromkeys(self.dims + self.sum_cols))
+        w = src.winners_at(spark, v0, v1,
+                           changes.select(*src.key_cols).distinct(),
+                           buckets, cols=cols)
+        if w is None:
+            return None
+        # each key's new row counts +1, its old row -1 (absent = no row)
+        sides = [F.when(F.col(v).isNotNull(), F.struct(
+            *[F.col(f"{v}.{c}").alias(c) for c in cols], F.lit(s).alias("_w")))
+            for v, s in (("_v1", 1), ("_v0", -1))]
+        signed = w.select(F.inline(F.filter(F.array(*sides),
+                                            lambda x: x.isNotNull())))
+        return self._merge(spark, self._signed(signed, F.col("_w")), cleanup)
 
-    def _merge(self, spark: SparkSession, parts: list[DataFrame],
+    def _merge(self, spark: SparkSession, signed: DataFrame,
                cleanup: contextlib.ExitStack) -> DataFrame:
-        """The view rows of the dim groups ``parts`` (signed source rows)
+        """The view rows of the dim groups ``signed`` (signed source rows)
         touch, with the signed contributions added to their current
         measures; groups whose count reaches zero become tombstones."""
-        signed = functools.reduce(lambda a, b: a.unionByName(b), parts)
         # delta drives the bucket-id collect AND the merge write — persist
         # so its O(changed-bucket state) upstream computes once
         delta = self._agg(signed).persist()
@@ -339,6 +365,14 @@ class SCD2View(ChangeFeedView):
     Bootstrap over a vacuumed source (see ``ChangeFeedView``) seeds each
     key's log with its CURRENT version only: history before the vacuum
     horizon is unrecoverable by definition.
+
+    Layout: a NEW view table with ``n_buckets=None`` takes the source's
+    bucket layout (an existing one keeps its stored layout). With equal
+    layouts a key lives in the same bucket id in both tables, so the
+    refresh reads exactly the view buckets of the source's changed buckets
+    (``changed_buckets``, no job); an explicit other ``n_buckets``, or a
+    stored table with another layout, costs one bucket-id collect per
+    refresh.
     """
 
     _META = {"_commit_version", "_commit_batch_id"}
@@ -347,6 +381,8 @@ class SCD2View(ChangeFeedView):
                  n_buckets: int | None = None, op_col: str = "op"):
         self.source = source
         self.op_col = op_col
+        if n_buckets is None and not (Path(root) / "_table.json").exists():
+            n_buckets = source.n_buckets  # fresh table: the source's layout
         self.table = SnapshotTable(root, key_cols=list(source.key_cols),
                                    n_buckets=n_buckets)
 
@@ -375,17 +411,20 @@ class SCD2View(ChangeFeedView):
 
     def _bootstrap(self, spark: SparkSession, live: DataFrame, v1: int,
                    cleanup: contextlib.ExitStack) -> DataFrame:
-        return self._fold(spark, live, -1, v1, cleanup)
+        return self._fold(spark, live, -1, v1, None, cleanup)
 
     def _fold(self, spark: SparkSession, ch: DataFrame, v0: int, v1: int,
+              buckets: list[int] | None,
               cleanup: contextlib.ExitStack) -> DataFrame:
         key = list(self.source.key_cols)
         new_logs = (ch.groupBy(*key)
                       .agg(F.collect_list(self._version_struct(ch)).alias("_new")))
         # merge with the affected keys' EXISTING logs: manifest-pruned read
-        # of just those view buckets, left join (unaffected keys untouched)
-        cur = self.table.read_live(
-            spark, buckets=_touched_buckets(new_logs, self.table))
+        # of just those view buckets, left join (unaffected keys untouched).
+        # Source bucket ids address the view's buckets when the layouts match
+        if buckets is None or self.table.n_buckets != self.source.n_buckets:
+            buckets = _touched_buckets(new_logs, self.table)
+        cur = self.table.read_live(spark, buckets=buckets)
         new_t = new_logs.schema["_new"].dataType
         if cur is not None:
             j = new_logs.join(

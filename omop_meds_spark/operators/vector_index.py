@@ -8,7 +8,8 @@ upserts and deletes, WITHOUT ever re-indexing the corpus.
 
 ``IVFIndexView`` is that index as a materialized view, maintained from the
 table's change feed exactly like ``IncrementalAggView`` maintains an
-aggregate (a ``ChangeFeedView``, same O(changed data) refresh cost), but
+aggregate (a ``ChangeFeedView``: each refresh reads the live state of
+the source buckets the range changed, at the new version only), but
 keyed BY THE SOURCE KEY — which makes the fold strictly
 simpler: no old-state subtraction, a changed key's index row is simply
 upserted (its new cell + quantized vector) or tombstoned (key deleted),
@@ -53,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..table import SnapshotTable
-from .incremental import ChangeFeedView, _touched_buckets
+from .incremental import ChangeFeedView
 from .similarity import QUANT, _nearest_cells, int_dot
 
 _CODEBOOK_FILE = "_codebook.json"
@@ -278,15 +279,13 @@ class IVFIndexView(ChangeFeedView):
         return self._assign(spark, live)
 
     def _fold(self, spark: SparkSession, changes: DataFrame, v0: int, v1: int,
-              cleanup: contextlib.ExitStack) -> DataFrame:
+              buckets: list[int], cleanup: contextlib.ExitStack) -> DataFrame:
         """Key-local: changed keys re-assign from their LIVE state at v1
         (never from the range's raw winners — the LWW across generations
         is what counts), deleted keys tombstone."""
         src = self.source
-        keys = changes.select(*src.key_cols).distinct().persist()
-        cleanup.callback(keys.unpersist)
-        live = src.read_live(spark, buckets=_touched_buckets(keys, src),
-                             version=v1)
+        keys = changes.select(*src.key_cols).distinct()
+        live = src.read_live(spark, buckets=buckets, version=v1)
         if live is None:
             return self._tombstones(keys)
         new_live = live.join(keys, on=src.key_cols, how="left_semi")

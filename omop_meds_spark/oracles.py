@@ -1217,7 +1217,7 @@ ORACLES["token_packing"] = """
 SELECT source, doc_id, n_chars,
        ((SUM(n_chars) OVER (PARTITION BY source ORDER BY doc_id
                             ROWS UNBOUNDED PRECEDING) - n_chars)
-        // 20000) AS bin_id
+        // 20000)::BIGINT AS bin_id
 FROM documents
 """
 
@@ -1309,8 +1309,8 @@ probes AS (
                     s -> (s[1] - s[2]) * (s[1] - s[2]))), c.cid
   LIMIT 3)
 SELECT z.vec_id, a.cell::INT AS cell,
-       list_sum(list_transform(list_zip(z.e, q.qe),
-                s -> s[1] * s[2])) AS score
+       (list_sum(list_transform(list_zip(z.e, q.qe),
+                 s -> s[1] * s[2])))::BIGINT AS score
 FROM qz z JOIN assign a USING (vec_id), q
 WHERE a.cell IN (SELECT cid FROM probes)
 ORDER BY score DESC, z.vec_id
@@ -1377,8 +1377,8 @@ probes AS (
                     s -> (s[1] - s[2]) * (s[1] - s[2]))), c.cid
   LIMIT 3)
 SELECT z.vec_id, a.cell::INT AS cell,
-       list_sum(list_transform(list_zip(z.e, q.qe),
-                s -> s[1] * s[2])) AS score
+       (list_sum(list_transform(list_zip(z.e, q.qe),
+                 s -> s[1] * s[2])))::BIGINT AS score
 FROM qz z JOIN assign a USING (vec_id), q
 WHERE a.cell IN (SELECT cid FROM probes)
 ORDER BY score DESC, z.vec_id

@@ -34,6 +34,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.incremental import refresh_views
 from .operators.meds import MEDS_KEY_COLS, change_winners_to_meds
 from .operators.upsert import last_writer_wins
 from .plans.align import SchemaRegistry
@@ -244,10 +245,11 @@ class CDCRunner:
         self.dlq_root = Path(table_root) / "dlq"
         # opt-in incremental materialized views (operators/incremental.py)
         # over the STATE table: refreshed after each committed batch and
-        # once more at the end of run(). Zero cost when empty (the bench
-        # default). A crash between the batch commit and the refresh is
-        # self-healing — the view's cursor folds everything unconsumed on
-        # the next refresh.
+        # once more at the end of run(), all views CONCURRENTLY (each reads
+        # the source and commits to its own table — refresh_views). Zero
+        # cost when empty (the bench default). A crash between the batch
+        # commit and the refresh is self-healing — the view's cursor folds
+        # everything unconsumed on the next refresh.
         self.views = list(views or [])
         # AQE is OFF inside apply_batch by default (restored after): the
         # micro-batch plan shape is fixed and pre-sized (scan → one keyed
@@ -405,8 +407,7 @@ class CDCRunner:
                         if not (self.concurrent_writers
                                 and isinstance(e, ConcurrentWriteConflict)):
                             raise
-            for v in self.views:
-                v.refresh(self.spark)
+            refresh_views(self.spark, self.views)
         finally:
             winners.unpersist()
         wall = time.monotonic() - t0
@@ -445,8 +446,7 @@ class CDCRunner:
                 out.append(m)
         # catch-up fold: heals a crash after the last commit but before its
         # refresh, and a resume that skipped every batch as committed
-        for v in self.views:
-            v.refresh(self.spark)
+        refresh_views(self.spark, self.views)
         return out
 
     # ------------------------------------------------------------ queries

@@ -52,6 +52,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.incremental import refresh_views
 from ..operators.meds import MEDS_KEY_COLS, change_winners_to_meds
 from ..operators.upsert import last_writer_wins
 from ..plans.align import SchemaRegistry
@@ -79,8 +80,8 @@ class StreamingCDCRunner:
     ):
         self.spark = spark
         # incremental materialized views (ChangeFeedView subclasses —
-        # anything with .refresh(spark)), refreshed inside foreachBatch
-        # after the micro-batch commits: the streaming twin of
+        # anything with .refresh(spark)), refreshed concurrently inside
+        # foreachBatch after the micro-batch commits: the streaming twin of
         # CDCRunner(views=). A crash between commit and refresh self-heals
         # (the view's lineage cursor folds everything unconsumed next time).
         self.views = list(views or [])
@@ -212,8 +213,7 @@ class StreamingCDCRunner:
                 hot = t.hot_buckets(8)
                 if hot:
                     t.compact(self.spark, buckets=hot)
-            for v in self.views:
-                v.refresh(self.spark)
+            refresh_views(self.spark, self.views)
         finally:
             winners.unpersist()
         self.metrics.append(

@@ -71,6 +71,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import bisect
+import functools
 import json
 import os
 import re
@@ -1090,6 +1091,83 @@ class SnapshotTable:
         for df in parts[1:]:
             out = out.unionByName(df, allowMissingColumns=True)
         return out
+
+    def changed_buckets(self, since_version: int,
+                        to_version: int | None = None) -> list[int] | None:
+        """Sorted ids of the buckets that ``read_changes(since_version,
+        to_version)`` draws rows from — the ``files_add`` keys of the
+        range's manifests, so no Spark job. Every changed key hashes to one
+        of them under the current layout. None when that cannot be said
+        from the log: a manifest in the range was written under another
+        layout or changes it (a rebucket), or predates layout recording —
+        bucket ids from before that point were hashed differently."""
+        to_version = self.version if to_version is None else to_version
+        out: set[int] = set()
+        for v, _, p in self._raw_log_entries():
+            if since_version < v <= to_version:
+                d = json.loads(p.read_text())
+                if (d.get("n_buckets") != self.n_buckets
+                        or d.get("offsets_reset")):
+                    return None
+                out.update(int(b) for b in d.get("files_add", {}))
+        return sorted(out)
+
+    def winners_at(self, spark: SparkSession, v0: int, v1: int,
+                   keys: DataFrame, buckets: list[int] | None,
+                   cols: list[str]) -> DataFrame | None:
+        """Each key of ``keys`` beside its live row at version ``v0`` and at
+        ``v1``: struct columns ``_v0`` and ``_v1`` holding ``cols``, null
+        where the key is absent or deleted (``op = 'D'``) at that version.
+        ``v0 < 0`` is the empty table; ``buckets=None`` reads every bucket.
+
+        The before/after diff of a change-feed consumer in ONE scan: the
+        two versions share most files, so the union of the ``buckets``'
+        files at both versions is read once, each file tagged with the
+        versions it is live in, semi-joined to ``keys`` and LWW-reduced by
+        a single ``groupBy(key)`` with one ``max_by`` per version — the
+        same (seq_no, event_id-or-seq_no) order as ``read_live``. A version
+        written under another bucket layout contributes all its files, as
+        ``read`` does. Raises on a vacuumed version; None when neither
+        version holds a file in ``buckets``."""
+        tagged: dict[str, list[bool]] = {}
+        for i, v in enumerate((v0, v1)):
+            if v < 0:
+                continue
+            m = self._load_state(v)
+            if m is None:
+                raise ValueError(f"winners_at: version {v} is no longer in "
+                                 "the log (vacuumed)")
+            same_layout = m.get("n_buckets", self.n_buckets) == self.n_buckets
+            for b, fs in m["files"].items():
+                if buckets is None or not same_layout or int(b) in buckets:
+                    for f in fs:
+                        tagged.setdefault(f, [False, False])[i] = True
+        if not tagged:
+            return None
+        # one schema for every file (generations may span schema versions);
+        # each group of files live in the same versions is one scan with
+        # literal tags, so nothing compares the paths Spark reports
+        schema = spark.read.option("mergeSchema", "true").parquet(
+            *[str(self.root / f) for f in tagged]).schema
+        groups: dict[tuple[bool, bool], list[str]] = {}
+        for f, tag in tagged.items():
+            groups.setdefault(tuple(tag), []).append(str(self.root / f))
+        parts = [spark.read.schema(schema).parquet(*fs)
+                 .withColumn("_in_v0", F.lit(t0)).withColumn("_in_v1", F.lit(t1))
+                 for (t0, t1), fs in sorted(groups.items())]
+        rows = functools.reduce(lambda a, b: a.unionByName(b), parts)
+        rows = rows.join(keys.select(*self.key_cols), self.key_cols,
+                         "left_semi")
+        tb = "event_id" if "event_id" in schema.fieldNames() else "seq_no"
+        order = F.struct(F.col("seq_no"), F.col(tb))
+        payload = F.struct(F.col("op").alias("_op"), *[F.col(c) for c in cols])
+        w = rows.groupBy(*self.key_cols).agg(*[
+            F.max_by(payload, F.when(F.col(f"_in_{v}"), order)).alias(f"_w{v}")
+            for v in ("v0", "v1")])
+        live = [F.when(F.col(f"_w{v}._op") != "D", F.struct(
+            *[F.col(f"_w{v}.{c}").alias(c) for c in cols])).alias(f"_{v}")
+            for v in ("v0", "v1")]
+        return w.select(*self.key_cols, *live)
 
     def _raw_log_entries(self) -> list[tuple[int, str, Path]]:
         """Like ``_log_entries`` but prefers the DELTA manifest when a
